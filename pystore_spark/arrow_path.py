@@ -14,19 +14,38 @@ byte-compatible with the Spark writer:
   type (session.py sets ``spark.sql.parquet.outputTimestampType`` so
   the Spark writer matches),
 * same JSON sidecar (utils.write_metadata) and partition-plan dict,
-* same two-phase swap / backup protocols (Collection._atomic_install,
-  Collection._swap_bucket_dirs), so crash recovery is shared.
+* same manifest commit protocol (Collection._commit_staged), so crash
+  recovery and the observed-state guards are shared.
 
 A single item may freely mix Spark-written and Arrow-written files;
 both Spark and pyarrow.dataset readers unify them.
+
+Appends to a time-layout item touch only the buckets the incoming
+rows fall in, and decide from the keys alone what to write. Only the
+index column(s) of each touched stored bucket are read, to learn
+whether the merge would drop a stored row — which only ``keep_last``
+does, when the batch repeats a stored key or the bucket already holds
+a duplicate key:
+
+* nothing dropped (new days or new keys; always so for keep_first,
+  error and keep_all): the surviving incoming rows become one new
+  sorted file per touched bucket, committed as a pure file addition
+  (``scope='add'``). No stored byte is re-read or re-encoded; the
+  bucket holds one more file until ``compact()`` / ``maintain()``
+  folds it — the add-file commit of Delta Lake.
+* something dropped (an upsert): each touched bucket is read, merged,
+  sorted and cast by its own worker thread, and the merged buckets
+  replace the touched buckets' files (``scope='buckets'``).
+
+Size-layout items are merged and rewritten whole.
 
 Scale discipline: above ``config.DRIVER_PATH_MAX_BYTES`` (default
 256 MB, env ``PYSTORE_SPARK_DRIVER_PATH_MAX_BYTES``) every entry point
 returns False and the caller runs the distributed Spark path — the
 driver never materializes data-scale frames. For appends the bound is
 incoming + touched-bucket bytes, so a small append to a 100 TB item
-still qualifies: it reads only the touched time buckets through
-pyarrow and swaps only those directories.
+still qualifies: it reads at most the touched time buckets through
+pyarrow and commits only their file pointers.
 """
 
 from __future__ import annotations
@@ -545,9 +564,11 @@ def try_append(
     sidecar_extra: dict | None = None,
 ) -> bool:
     """Driver-side append; True when fully handled. The size gate is
-    incoming + touched buckets (time layout) or incoming + whole item
-    (size layout). All conversion happens before any filesystem
-    mutation; after that the shared swap protocols provide the same
+    incoming + touched buckets (time layout, :func:`_append_buckets`:
+    add-file or bucket rewrite, decided from the keys — see the module
+    docstring) or incoming + whole item (size layout: merge and
+    rewrite). All reads and merges happen before any filesystem
+    mutation; after that the shared commit protocol provides the same
     crash guarantees as the Spark path."""
     threshold = config.DRIVER_PATH_MAX_BYTES
     if threshold <= 0:
@@ -617,97 +638,40 @@ def try_append(
     )
     if time_scoped and inc_tbl.column(icol).null_count:
         return False  # null bucket keys → let Spark handle layout
+    try:
+        # client-typed (ns) on BOTH sides: pandas input arrives
+        # storage-typed (µs UTC) from table_from_flat, and a µs-UTC vs
+        # ns concat is an Arrow type error — which the broad fallbacks
+        # below would swallow, silently demoting every pandas append
+        # to the Spark path (the writers re-cast to storage)
+        inc_tbl = normalize_read_types(inc_tbl)
+    except Exception:
+        return False
+    if time_scoped:
+        return _append_buckets(
+            col, item, existing_item, dataset, data_cols, inc_tbl,
+            idx_cols, plan, duplicate_handling, order_col, sidecar,
+        )
 
-    # conversion + merge happen BEFORE any filesystem mutation, so an
+    # size layout (or non-timestamp index): full driver rewrite.
+    # Conversion + merge happen BEFORE any filesystem mutation, so an
     # unexpected conversion failure (exotic nested types, overflow)
     # can still fall back to the Spark path; semantic errors propagate
     try:
         from pystore_spark import manifest as mf
 
-        if time_scoped:
-            inc_idx = (
-                normalize_read_types(inc_tbl.select([icol]))
-                .column(icol)
-                .to_pandas()
-            )
-            labels = bucket_labels(inc_idx, plan.freq)
-            buckets = sorted(labels.unique())
-            lb = mf.live_buckets(item_path)
-            if lb is not None:
-                has_touched = any(b in lb for b in buckets)
-            else:
-                from pystore_spark.fs import fs_for
-
-                _fs = fs_for(item_path)
-                has_touched = any(
-                    _fs.exists(item_path / f"{PARTITION_COL}={b}")
-                    for b in buckets
-                )
-            touched_bytes = mf.item_bytes(item_path, buckets=set(buckets))
-            if touched_bytes + inc_tbl.nbytes > threshold:
-                return False
-            if has_touched:
-                ex_tbl = dataset.to_table(
-                    columns=data_cols,
-                    filter=pc.field(PARTITION_COL).isin(buckets),
-                )
-            else:
-                ex_tbl = dataset.schema.empty_table().select(data_cols)
-        else:
-            # size layout (or non-timestamp index): full driver rewrite
-            if mf.item_bytes(item_path) + inc_tbl.nbytes > threshold:
-                return False
-            ex_tbl = dataset.to_table(columns=data_cols)
-
-        ex_tbl = normalize_read_types(ex_tbl)
-        # client-typed (ns) on BOTH sides: pandas input arrives
-        # storage-typed (µs UTC) from table_from_flat, and a µs-UTC vs
-        # ns concat is an Arrow type error — which the broad fallback
-        # below used to swallow, silently demoting every pandas append
-        # to the Spark path (write_table_files re-casts to storage)
-        inc_tbl = normalize_read_types(inc_tbl)
-        if len(idx_cols) == 1:
-            # fast path: payload never leaves Arrow
-            out = merge_arrow(
-                ex_tbl, inc_tbl, idx_cols[0], duplicate_handling, order_col
-            )
-        else:
-            merged = merge_pandas(
-                ex_tbl.to_pandas(),
-                normalize_read_types(inc_tbl).to_pandas(),
-                idx_cols, duplicate_handling, order_col,
-            )
-            out = _merged_to_table(merged, ex_tbl.schema, inc_tbl.schema)
+        if mf.item_bytes(item_path) + inc_tbl.nbytes > threshold:
+            return False
+        ex_tbl = normalize_read_types(dataset.to_table(columns=data_cols))
+        out = _merge_tables(
+            ex_tbl, inc_tbl, idx_cols, duplicate_handling, order_col
+        )
     except (ValidationError, DataIntegrityError):
         raise
     except Exception:
         return False
 
-    # observed-state guard: the merge above was computed from
-    # existing_item's manifest; a concurrent commit landing in a
-    # touched bucket (or anywhere, for the whole-item path) between
-    # that read and this commit raises ConcurrentCommitError — the
-    # documented caller-retries contract, same as a lost manifest CAS
-    expect = (
-        mf.bucket_file_map(existing_item._manifest)
-        if existing_item._manifest is not None
-        else None
-    )
-    # observed-no-masks expectation: the entry bail-out above proved
-    # the dv map empty, so ANY fresh mask on a replaced file means a
-    # concurrent dv commit landed mid-append — conflict and retry
-    expect_dv = (
-        {} if existing_item._manifest is not None else None
-    )
-    if time_scoped:
-        col._install_buckets(
-            item,
-            lambda tmp: write_table_files(out, Path(tmp), plan, idx_cols),
-            sidecar,
-            expect_files=expect,
-            expect_dv=expect_dv,
-        )
-        return True
+    expect, expect_dv = _observed_state(existing_item._manifest)
     new_plan = (
         plan
         if plan.kind == "time"
@@ -722,6 +686,202 @@ def try_append(
         sidecar,
         expect_files=expect,
         expect_dv=expect_dv,
+    )
+    return True
+
+
+def _observed_state(man: dict | None):
+    """(expect_files, expect_dv) for a commit computed from ``man``:
+    a concurrent commit landing in a touched bucket (or anywhere, for
+    the item and add scopes) since then raises ConcurrentCommitError —
+    the caller-retries contract, as for a lost manifest CAS. The dv
+    expectation is empty because try_append's entry bail-out proved
+    the dv map empty: ANY fresh mask on a replaced file conflicts."""
+    from pystore_spark import manifest as mf
+
+    if man is None:
+        return None, None
+    return mf.bucket_file_map(man), {}
+
+
+def _merge_tables(
+    ex: pa.Table, inc: pa.Table, idx_cols: list[str], strategy: str,
+    order_col: str | None,
+) -> pa.Table:
+    """Client-typed merge: merge_arrow for single-key items (payload
+    never leaves Arrow), merge_pandas for MultiIndex items."""
+    if len(idx_cols) == 1:
+        return merge_arrow(ex, inc, idx_cols[0], strategy, order_col)
+    merged = merge_pandas(
+        ex.to_pandas(), inc.to_pandas(), idx_cols, strategy, order_col
+    )
+    return _merged_to_table(merged, ex.schema, inc.schema)
+
+
+def _key_index(tbl: pa.Table, idx_cols: list[str]) -> pd.Index:
+    """A client-typed table's index keys as a pandas Index: the
+    equality merge_arrow / merge_pandas dedupe by (NaN equals NaN)."""
+    if len(idx_cols) == 1:
+        return pd.Index(tbl.column(idx_cols[0]).to_numpy())
+    return pd.MultiIndex.from_frame(tbl.select(idx_cols).to_pandas())
+
+
+def _incoming_keep_mask(
+    stored_keys, inc_tbl: pa.Table, idx_cols: list[str],
+    rows: dict[str, np.ndarray], stored: list[str], strategy: str,
+) -> np.ndarray | None:
+    """The key-only decision. Returns which incoming rows the merge
+    keeps when it drops no stored row, or None when it would drop one.
+
+    Only ``keep_last`` drops stored rows: a stored key the batch
+    repeats, or a stored key that is already duplicated (keep_last
+    collapses pre-existing duplicates). The scan stops at the first
+    such bucket. ``keep_first`` drops the incoming rows whose key is
+    stored; ``error`` raises with the overlap summed over every
+    touched bucket; ``keep_all`` reads no keys at all."""
+    keep = np.ones(inc_tbl.num_rows, dtype=bool)
+    if strategy == "keep_all" or not stored:
+        return keep
+    inc_keys = _key_index(inc_tbl, idx_cols)
+    overlap = 0
+    for b in stored:
+        ex_keys = stored_keys(b)
+        pos = rows[b]
+        hit = inc_keys[pos].isin(ex_keys)
+        if strategy == "keep_last" and (hit.any() or not ex_keys.is_unique):
+            return None
+        keep[pos] = ~hit
+        overlap += int(hit.sum())
+    if strategy == "error" and overlap:
+        raise DataIntegrityError(
+            f"append would create {overlap} duplicate index entries "
+            "(duplicate_handling='error')"
+        )
+    return keep
+
+
+def _append_buckets(
+    col: Any, item: str, existing_item: Any, dataset: Any,
+    data_cols: list[str], inc_tbl: pa.Table, idx_cols: list[str],
+    plan: PartitionPlan, strategy: str, order_col: str | None,
+    sidecar: dict,
+) -> bool:
+    """Time-layout append of client-typed ``inc_tbl``, scoped to the
+    buckets its rows fall in (module docstring). When any touched
+    bucket drops a stored row, EVERY touched bucket is rewritten: a
+    buckets-scope commit replaces the files of each bucket it stages
+    into, so an added file there would lose that bucket's stored rows.
+    Incoming columns or types that differ from the stored schema force
+    the rewrite too, so a bucket's files keep one schema. Reads and
+    merges precede any filesystem mutation: a conversion failure still
+    falls back to the Spark path (False); semantic errors propagate."""
+    from pystore_spark import manifest as mf
+
+    item_path = Path(existing_item.path)
+    icol = idx_cols[0]
+    try:
+        labels = bucket_labels(inc_tbl.column(icol).to_pandas(), plan.freq)
+        rows = labels.groupby(labels.to_numpy()).indices
+        buckets = sorted(rows)
+        live = mf.live_buckets(item_path)
+        if live is None:
+            from pystore_spark.fs import fs_for
+
+            _fs = fs_for(item_path)
+            live = {
+                b for b in buckets
+                if _fs.exists(item_path / f"{PARTITION_COL}={b}")
+            }
+        stored = [b for b in buckets if b in live]
+        touched_bytes = mf.item_bytes(item_path, buckets=set(buckets))
+        if touched_bytes + inc_tbl.nbytes > config.DRIVER_PATH_MAX_BYTES:
+            return False
+
+        def read_bucket(b: str, columns: list[str]) -> pa.Table:
+            return normalize_read_types(
+                dataset.to_table(
+                    columns=columns, filter=pc.field(PARTITION_COL) == b
+                )
+            )
+
+        empty = normalize_read_types(
+            dataset.schema.empty_table().select(data_cols)
+        )
+        keep = _incoming_keep_mask(
+            lambda b: _key_index(read_bucket(b, idx_cols), idx_cols),
+            inc_tbl, idx_cols, rows, stored, strategy,
+        )
+        added = None
+        if keep is not None:
+            # merging into the empty stored schema applies the
+            # within-batch tiebreak and strips order plumbing
+            added = _merge_tables(
+                empty, inc_tbl.filter(pa.array(keep)), idx_cols,
+                strategy, order_col,
+            )
+            if [(f.name, f.type) for f in added.schema] != [
+                (f.name, f.type) for f in empty.schema
+            ]:
+                added = None
+        if added is None:
+            sort_keys = [(c, "ascending") for c in idx_cols]
+
+            def merge_bucket(b: str) -> pa.Table:
+                ex = read_bucket(b, data_cols) if b in stored else empty
+                out = _merge_tables(
+                    ex, inc_tbl.take(rows[b]), idx_cols, strategy, order_col
+                )
+                out = out.take(pc.sort_indices(out, sort_keys=sort_keys))
+                return out.cast(storage_schema(out.schema))
+
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(min(8, len(buckets))) as pool:
+                merged = list(pool.map(merge_bucket, buckets))
+    except (ValidationError, DataIntegrityError):
+        raise
+    except Exception:
+        return False
+
+    man = existing_item._manifest
+    expect, expect_dv = _observed_state(man)
+    compression = plan.compression or "snappy"
+    if added is None:
+        col._install_buckets(
+            item,
+            lambda tmp: _write_files(
+                [
+                    (t, Path(tmp) / f"{PARTITION_COL}={b}"
+                     / "part-00000.parquet")
+                    for b, t in zip(buckets, merged)
+                ],
+                compression,
+            ),
+            sidecar,
+            expect_files=expect,
+            expect_dv=expect_dv,
+        )
+        return True
+    if expect is not None:
+        # the decision read these files' keys: a mask landing on any
+        # of them since then conflicts (an add replaces no file, so
+        # the buckets-scope check on replaced files would see nothing)
+        expect_dv = {
+            f: None
+            for b in stored
+            for f in expect.get(f"{PARTITION_COL}={b}", ())
+        }
+
+    def write_added(tmp) -> None:
+        # every incoming row may be a keep_first loser: the commit
+        # still lands (sidecar_extra, one version per append) with no
+        # file added
+        if added.num_rows:
+            write_table_files(added, Path(tmp), plan, idx_cols)
+
+    col._commit_staged(
+        item, write_added, sidecar, scope="add",
+        expect_files=expect, expect_dv=expect_dv,
     )
     return True
 

@@ -2077,8 +2077,13 @@ def _pq_lut_frame_collect(
     """Driver-side LUT build (collect + numpy/pure-Python fold +
     createDataFrame) — the GEMM-tier path, where an in-plan
     expression would put m·n_cells folds in the plan but
-    :func:`_pq_lut` vectorizes the same sums through numpy."""
-    qrows = qa.select(id_col, vec_col, cell_col).collect()
+    :func:`_pq_lut` vectorizes the same sums through numpy. Null-vector
+    and null-cell probe rows are dropped, as the in-plan tier does."""
+    qrows = (
+        qa.filter(F.col(vec_col).isNotNull() & F.col(cell_col).isNotNull())
+        .select(id_col, vec_col, cell_col)
+        .collect()
+    )
     seen: dict = {}
     rows = []
     for r in qrows:

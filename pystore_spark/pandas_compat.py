@@ -173,24 +173,30 @@ def flatten_pandas(
             dtype = s.dtype
 
         if pd.api.types.is_datetime64_any_dtype(dtype):
-            vals = s.astype("int64", copy=False)
-            if bool(((vals % 1000) != 0).any()):
-                # Spark timestamps are µs — persist full ns fidelity
-                # in a shadow long column and keep the visible column
-                # µs-aligned (safe Arrow conversion, no fallback)
-                pdf[col + "__ns"] = vals
-                meta["ns_columns"].append(col)
-                pdf[col] = pdf[col].dt.floor("us")
+            # int64 views are in the dtype's own unit (pandas 2 keeps
+            # s/ms/us — pyarrow's to_pandas yields us); only an ns
+            # column can hold sub-µs values, and the stored epoch /
+            # shadow longs are always ns
+            if s.dt.unit == "ns":
+                vals = s.astype("int64", copy=False)
+                if bool(((vals % 1000) != 0).any()):
+                    # Spark timestamps are µs — persist full ns
+                    # fidelity in a shadow long column and keep the
+                    # visible column µs-aligned (safe Arrow
+                    # conversion, no fallback)
+                    pdf[col + "__ns"] = vals
+                    meta["ns_columns"].append(col)
+                    pdf[col] = pdf[col].dt.floor("us")
             if epochdate:
                 # reference epochdate=True stores the index as epoch
                 # int64 (pystore/utils.py:65-75)
                 conversions[col] = {"kind": "epoch_ns"}
-                pdf[col] = vals
+                pdf[col] = s.astype("datetime64[ns]").astype("int64")
             continue
 
         if pd.api.types.is_timedelta64_dtype(dtype):
             conversions[col] = {"kind": "timedelta_ns"}
-            pdf[col] = s.astype("int64")
+            pdf[col] = s.astype("timedelta64[ns]").astype("int64")
             continue
 
         if isinstance(dtype, pd.PeriodDtype):

@@ -944,12 +944,11 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (
-        F.col("ts").cast("long")
-        - F.lag(F.col("ts")).over(w).cast("long")
-    )
+    # exact µs gap, as the oracle's interval comparison: a cast to
+    # long seconds would make 30 min + 0.5 s no new session
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     new_session = F.when(
-        F.lag("ts").over(w).isNull() | (gap > 30 * 60), 1
+        F.lag("ts").over(w).isNull() | (gap > 30 * 60 * 1_000_000), 1
     ).otherwise(0)
     wrun = (
         Window.partitionBy("user_id")

@@ -286,3 +286,163 @@ def test_write_append_sequence_across_threshold_boundary(test_collection):
         # the replaced buckets
         assert man["version"] == ref_man["version"], name
         assert buckets(man) == ref_buckets, name
+
+
+# ---------------------------------------------------------------------------
+# bucket-local append: key-only decision, add-file vs bucket rewrite
+# ---------------------------------------------------------------------------
+def _bucket_files(test_collection, name):
+    from pystore_spark import manifest as mf
+    from pystore_spark import utils
+
+    man = utils.read_manifest(test_collection._item_path(name))
+    return man, mf.bucket_file_map(man)
+
+
+def test_disjoint_append_adds_one_file_to_its_bucket(test_collection):
+    """Fresh keys under keep_last drop no stored row: the batch lands
+    as one new file in its bucket, beside the stored file, which stays
+    live — nothing goes stale."""
+    df = _frame(20_000, freq="10min")  # monthly buckets
+    test_collection.write("d", df)
+    man0, before = _bucket_files(test_collection, "d")
+    extra = _frame(5, start="2023-02-10 00:05", freq="10min", v0=1e6)
+    test_collection.append("d", extra)
+    man1, after = _bucket_files(test_collection, "d")
+    assert len(before["_pb=2023-02"]) == 1
+    assert set(after["_pb=2023-02"]) > set(before["_pb=2023-02"])
+    assert len(after["_pb=2023-02"]) == 2
+    assert {b: f for b, f in after.items() if b != "_pb=2023-02"} == {
+        b: f for b, f in before.items() if b != "_pb=2023-02"
+    }
+    assert not man1.get("stale")
+    assert man1["version"] == man0["version"] + 1
+    out = test_collection.item("d").to_pandas()
+    assert out.index.is_monotonic_increasing
+    pd.testing.assert_frame_equal(
+        out, pd.concat([df, extra]).sort_index().rename_axis("index"),
+        check_freq=False,
+    )
+
+    # compact() folds the added files back to one file per bucket
+    rep = test_collection.compact("d")
+    assert rep["buckets_compacted"] == 1
+    _, folded = _bucket_files(test_collection, "d")
+    assert all(len(f) == 1 for f in folded.values())
+    assert folded.keys() == before.keys()
+    pd.testing.assert_frame_equal(
+        test_collection.item("d").to_pandas(), out
+    )
+
+
+def test_keep_last_collapses_stored_duplicates(test_collection):
+    """A bucket that already holds duplicate keys (left by keep_all)
+    is merged and rewritten by a keep_last append even when the batch
+    brings only fresh keys: keep_last collapses stored duplicates."""
+    test_collection.write("k", _frame(2_000, freq="h"), freq="M")
+    dups = _frame(3, start="2023-02-01", freq="h", v0=500.0)
+    test_collection.append("k", dups, duplicate_handling="keep_all")
+    _, files = _bucket_files(test_collection, "k")
+    assert len(files["_pb=2023-02"]) == 2  # keep_all added a file
+    assert len(test_collection.item("k").to_pandas()) == 2_003
+    fresh = pd.DataFrame(
+        {"value": [-1.0], "tag": ["t9"]},
+        index=pd.DatetimeIndex(["2023-02-01 00:30"]),
+    )
+    test_collection.append("k", fresh)
+    man, files = _bucket_files(test_collection, "k")
+    assert len(files["_pb=2023-02"]) == 1  # rewritten, not added to
+    assert man["stale"]
+    out = test_collection.item("k").to_pandas()
+    assert len(out) == 2_001 and out.index.is_unique
+    # which STORED duplicate survives is unspecified (the Spark path
+    # ranks all stored rows alike), but it is one of them
+    assert out.loc[pd.Timestamp("2023-02-01 01:00"), "value"] in (
+        745.0, 501.0,
+    )
+
+
+def test_error_strategy_counts_overlap_across_buckets(test_collection):
+    """duplicate_handling='error' sums the overlap over every touched
+    bucket and raises before anything is staged."""
+    test_collection.write("e3", _frame(3_000, freq="h"), freq="M")
+    path = Path(test_collection.item("e3").path)
+    man0, _ = _bucket_files(test_collection, "e3")
+    files0 = _parquet_names(path.parent)
+    stamps = ["2023-01-05", "2023-01-06", "2023-02-05", "2023-02-06",
+              "2023-03-05", "2023-03-06", "2023-03-07 00:30"]
+    inc = pd.DataFrame(
+        {"value": np.arange(7.0), "tag": ["x"] * 7},
+        index=pd.DatetimeIndex(stamps),
+    )
+    with pytest.raises(DataIntegrityError, match=r"create 6 duplicate"):
+        test_collection.append("e3", inc, duplicate_handling="error")
+    man1, _ = _bucket_files(test_collection, "e3")
+    assert man1["version"] == man0["version"]
+    assert _parquet_names(path.parent) == files0
+
+
+def _multi_frame(n, start, v0=0.0):
+    ts = pd.date_range(start, periods=n, freq="6h")
+    idx = pd.MultiIndex.from_arrays(
+        [ts.repeat(2), ["a", "b"] * n], names=["ts", "sym"]
+    )
+    return pd.DataFrame(
+        {"value": np.arange(2 * n, dtype="float64") + v0}, index=idx
+    )
+
+
+@pytest.mark.parametrize("multi", [False, True], ids=["key", "multikey"])
+def test_multi_bucket_upsert_parity_all_strategies(
+    test_collection, spark, multi
+):
+    """A batch that both overlaps and extends several buckets, with an
+    in-batch duplicate: the Arrow path (merge_arrow for one key,
+    merge_pandas for a MultiIndex) and the Spark path must agree row
+    for row under every strategy, and raise alike under 'error'."""
+    if multi:
+        base = _multi_frame(600, "2023-01-01")  # 150 days
+        inc = _multi_frame(200, "2023-02-15", v0=1e4)
+        inc = pd.concat([inc, _multi_frame(1, "2023-03-01", v0=-7.0)])
+    else:
+        base = _frame(3_000, freq="h")
+        inc = _frame(1_500, start="2023-02-15", freq="h", v0=1e4)
+        inc = pd.concat([inc, _frame(1, start="2023-03-01", v0=-7.0)])
+    results, errors, rewrote = {}, {}, {}
+    old = config.DRIVER_PATH_MAX_BYTES
+    try:
+        for engine, thr in (("spark", 0), ("arrow", 256 << 20)):
+            for strat in ("keep_last", "keep_first", "keep_all", "error"):
+                name = f"{engine}_{strat}"
+                config.DRIVER_PATH_MAX_BYTES = 256 << 20
+                test_collection.write(name, base, freq="M")
+                config.DRIVER_PATH_MAX_BYTES = thr
+                try:
+                    test_collection.append(
+                        name, inc, duplicate_handling=strat
+                    )
+                except DataIntegrityError as exc:
+                    errors[name] = str(exc)
+                man, files = _bucket_files(test_collection, name)
+                assert len(files) >= 4  # a multi-bucket time layout
+                rewrote[name] = bool(man.get("stale"))
+                out = test_collection.item(name).to_pandas()
+                assert out.index.is_monotonic_increasing
+                results[name] = (
+                    out.reset_index()
+                    .sort_values(list(out.reset_index().columns))
+                    .reset_index(drop=True)
+                )
+    finally:
+        config.DRIVER_PATH_MAX_BYTES = old
+    for strat in ("keep_last", "keep_first", "keep_all", "error"):
+        pd.testing.assert_frame_equal(
+            results[f"spark_{strat}"], results[f"arrow_{strat}"]
+        )
+    # only keep_last drops stored rows, so only it rewrites buckets
+    assert {n for n, r in rewrote.items() if r and "arrow" in n} == {
+        "arrow_keep_last"
+    }
+    assert errors["arrow_error"] == errors["spark_error"]
+    assert set(errors) == {"arrow_error", "spark_error"}
+    assert len(results["arrow_keep_all"]) == len(base) + len(inc)

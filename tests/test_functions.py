@@ -1501,6 +1501,58 @@ def test_pq_adc_inplan_lut_matches_collect(spark):
     assert out.count() > 0
 
 
+def test_pq_adc_lut_tiers_drop_null_probes_alike(spark, monkeypatch):
+    """Null-vector and null-cell probe rows: the in-plan LUT tier and
+    the driver-collect tier must both drop them and return the same
+    top-k (the collect tier used to crash on them)."""
+    import numpy as np
+
+    from pystore_spark.sources import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    cents, books = S.train_residual_pq(
+        emb.filter(F.col("vec_id") % 2 == 0), "embedding", "vec_id",
+        n_cells=4, m=2, pq_cells=4, n_iters=2,
+    )
+    codes = S.pq_encode(
+        S.residualize_frame(
+            S._assign_cells(emb, "embedding", cents),
+            "embedding", "cell", cents,
+        ),
+        "embedding", books,
+    )
+    good = S.assign_probe_cells(
+        emb.filter("vec_id < 3"), "embedding", cents, nprobe=2
+    )
+    cols = ["vec_id", "embedding", "cell"]
+    bad = spark.createDataFrame(
+        [(900, None, 1), (901, [0.5] * 64, None)],
+        ", ".join(
+            f"{c} {good.schema[c].dataType.simpleString()}" for c in cols
+        ),
+    )
+    qa = good.select(*cols).unionByName(bad)
+
+    def search(gate):
+        monkeypatch.setattr(S, "GEMM_ASSIGN_MIN_CELLS", gate)
+        return sorted(
+            tuple(r) for r in S.pq_adc_cell_topk(
+                codes, qa, "embedding", "vec_id", "cell", books, k=5,
+                centroids=cents,
+            ).collect()
+        )
+
+    inplan = search(1 << 30)  # every n_cells is below the gate
+    collect = search(0)  # every n_cells is at or above it
+    # the gate also moves _pq_lut from the Python fold to numpy sums,
+    # so distances agree to rounding, not bit for bit
+    assert [r[:2] for r in inplan] == [r[:2] for r in collect]
+    np.testing.assert_allclose(
+        [r[2] for r in inplan], [r[2] for r in collect], rtol=1e-12
+    )
+    assert inplan and {r[0] for r in inplan} <= {0, 1, 2}
+
+
 def test_pq_encode_decode_and_adc_identity(spark):
     """Product quantization: codes are m smallints; the ADC distance
     (sum of per-subspace LUT entries) must equal the exact squared L2

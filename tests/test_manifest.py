@@ -126,8 +126,14 @@ def test_snapshot_gc_interplay(test_collection, monkeypatch):
     snap = test_collection.create_snapshot("keep")
     test_collection.append(
         "g",
-        pd.DataFrame(  # same bucket, fresh key → replaces the bucket file
-            {"v": [1.0]}, index=pd.DatetimeIndex(["2023-01-28 23:59:30"])
+        # same bucket: a stored key re-sent with its own value next to
+        # a fresh key, so keep_last replaces the bucket file (a batch
+        # of fresh keys alone would be added as a new file)
+        pd.DataFrame(
+            {"v": [38_880.0, 1.0]},
+            index=pd.DatetimeIndex(
+                ["2023-01-28 00:00:00", "2023-01-28 23:59:30"]
+            ),
         ),
     )
     man = utils.read_manifest(item_path)

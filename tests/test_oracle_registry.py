@@ -240,3 +240,45 @@ def test_demoted_query_matches_oracle(name, spark, duck):
     duck_pdf = duck.execute(spec.oracle_sql).df()
     problems = compare(name, spark_pdf, duck_pdf)
     assert not problems, f"{name}: {problems}"
+
+
+def test_sessionization_gap_is_exact(spark, tmp_path):
+    """A gap of 30 min + 0.5 s opens a new session and exactly 30 min
+    does not — the oracle compares the exact interval, so the query
+    must not round the gap to whole seconds."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check_correctness import compare
+
+    t0 = pd.Timestamp("2024-03-01 12:00:00")
+    half = pd.Timedelta(minutes=30)
+    rows = [  # (user_id, ts)
+        (1, t0), (1, t0 + half + pd.Timedelta("500ms")),
+        (2, t0), (2, t0 + half), (2, t0 + 2 * half + pd.Timedelta("1us")),
+        (3, t0),
+    ]
+    n = len(rows)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([ts for _, ts in rows], pa.timestamp("us")),
+            "user_id": pa.array([u for u, _ in rows], pa.int64()),
+            "event_type": ["click"] * n,
+            "value": [1.0] * n,
+            "props": ["{}"] * n,
+        }),
+        tmp_path / "events.parquet",
+    )
+    spec = QUERIES["sessionization"]
+    got = spec.spark_fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    want = con.execute(spec.oracle_sql).df()
+    con.close()
+    assert not compare("sessionization", got, want)
+    assert dict(zip(got["user_id"], got["n_sessions"])) == {1: 2, 2: 2, 3: 1}

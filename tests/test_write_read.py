@@ -104,6 +104,43 @@ def test_epochdate_roundtrip(test_collection, sample_data):
     assert len(out) == len(sample_data)
 
 
+@pytest.mark.parametrize("engine", ["arrow", "spark"])
+@pytest.mark.parametrize("epochdate", [False, True])
+def test_non_ns_datetime_units_roundtrip(
+    test_collection, monkeypatch, engine, epochdate
+):
+    """µs/ms datetimes (what pyarrow's to_pandas returns) and µs
+    timedeltas must be stored as their real instants, not their
+    own-unit integers taken as ns (which read back in 1970)."""
+    from pystore_spark import config
+
+    if engine == "spark":
+        monkeypatch.setattr(config, "DRIVER_PATH_MAX_BYTES", 0)
+    idx = pd.DatetimeIndex(
+        ["2024-01-02 03:04:05.123456", "2024-01-03 00:00:00.000001",
+         "2024-01-04"]
+    ).as_unit("us")
+    df = pd.DataFrame(
+        {
+            "v": [1.0, 2.0, 3.0],
+            "ts_ms": pd.DatetimeIndex(
+                ["2020-01-01 00:00:00.001", "2020-01-02",
+                 "2020-01-03 00:00:00.5"]
+            ).as_unit("ms"),
+            "ts_tz": idx.tz_localize("America/New_York"),
+            "td": pd.to_timedelta([1, 2, 1500], unit="us").as_unit("us"),
+        },
+        index=idx,
+    )
+    test_collection.write("units", df, epochdate=epochdate)
+    out = test_collection.item("units").to_pandas()
+    want = df.rename_axis("index")
+    want.index = want.index.as_unit("ns")
+    for name in ("ts_ms", "ts_tz", "td"):
+        want[name] = want[name].dt.as_unit("ns")
+    pd.testing.assert_frame_equal(out, want, check_freq=False)
+
+
 def test_empty_frame_with_schema(test_collection):
     empty = pd.DataFrame({"value": pd.Series(dtype="float64"),
                           "timestamp": pd.Series(dtype="datetime64[ns]")})
