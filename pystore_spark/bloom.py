@@ -64,6 +64,8 @@ import re
 from pathlib import Path
 from typing import Any, Iterable, Sequence
 
+from pystore_spark.utils import read_parquet
+
 log = logging.getLogger(__name__)
 
 BLOOM_DIR = "_blooms"
@@ -251,7 +253,7 @@ def build_for_files_spark(
     # suffix match (input_file_name returns a file:/ URI)
     rel_by_tail = {r: r for r in rels}
 
-    df = spark.read.parquet(*paths).select(
+    df = read_parquet(spark, paths).select(
         F.input_file_name().alias("_file"),
         *list(modes),
     )

@@ -267,7 +267,11 @@ def bucketed_frame(it: "Item") -> "DataFrame":
         # only pre-uid stores pay it).
         spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
     if not spark.catalog.tableExists(tbl):
-        schema = spark.read.parquet(str(view)).schema
+        from pystore_spark.utils import read_parquet
+
+        # a directory scan: Spark's own inference (read_parquet falls
+        # back), paid once per registered table
+        schema = read_parquet(spark, view).schema
         cols_ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in schema.fields

@@ -3621,9 +3621,7 @@ class Collection:
             ) -> DataFrame | None:
                 if not only:
                     return None
-                df = self.spark.read.option("basePath", str(base)).parquet(
-                    *sorted(only)
-                )
+                df = utils.read_parquet(self.spark, sorted(only), base)
                 if dvm.dv_map(man):
                     mask = dvm.mask_frame(self.spark, it._path, man)
                     if mask is not None:
@@ -7063,8 +7061,8 @@ class Collection:
             from pystore_spark import manifest as mf
 
             base = mf.base_dir(it_to._path, it_to._manifest)
-            df = self.spark.read.option("basePath", str(base)).parquet(
-                *[str(base / f) for f in added]
+            df = utils.read_parquet(
+                self.spark, [base / f for f in added], base
             )
             if dv_to:
                 # a file appended then dv-deleted inside the window:
@@ -7632,9 +7630,7 @@ class Collection:
             # files, and the replaced files' dv entries die at commit
             # — reading the bucket mask-blind would resurrect every
             # masked row and silently drop the mask
-            self.spark.read.option("basePath", str(base)).parquet(
-                *paths
-            )
+            utils.read_parquet(self.spark, paths, base)
         ).drop(PARTITION_COL)
         cplan = PartitionPlan(
             "time", freq=plan.freq, npartitions=needed_total,
@@ -7800,11 +7796,7 @@ class Collection:
             ]
             # dv mask applies: deleted rows must leave the histogram
             # (counts feed percentile estimates)
-            df = it._apply_dv(
-                self.spark.read.option("basePath", str(base)).parquet(
-                    *paths
-                )
-            )
+            df = it._apply_dv(utils.read_parquet(self.spark, paths, base))
             if missing_hist:
                 # pin edges from this (full) scan's min/max — one
                 # extra fused stats pass, paid only at first build
@@ -8281,9 +8273,9 @@ class Collection:
             df = (
                 # dv mask applies: deleted docs no longer contaminate
                 it._apply_dv(
-                    self.spark.read.option(
-                        "basePath", str(base)
-                    ).parquet(*[str(base / r) for r in live])
+                    utils.read_parquet(
+                        self.spark, [base / r for r in live], base
+                    )
                 )
                 if live and not need_full
                 else it.data

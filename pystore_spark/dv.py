@@ -56,10 +56,15 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from pystore_spark.utils import read_parquet
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
 DV_DIR = "_dv"
+#: every mask dir's data schema, as :func:`write_mask_dir` writes it --
+#: mask reads pin it instead of inferring it from a footer
+MASK_SCHEMA = "file STRING, pos BIGINT"
 
 #: above this many masked rows the broadcast hint is dropped and the
 #: anti-join shuffles — a mass-deleted item's mask can outgrow the
@@ -91,7 +96,9 @@ def mask_frame(spark, item_path, man: dict | None) -> "DataFrame | None":
     from pystore_spark import manifest as mf
 
     base = mf.base_dir(item_path, man or {})
-    return spark.read.parquet(*[str(base / r) for r in sorted(refs)])
+    return read_parquet(
+        spark, [base / r for r in sorted(refs)], schema=MASK_SCHEMA
+    )
 
 
 def scan_keys(base) -> tuple:
@@ -163,8 +170,10 @@ def stage_union_mask(
     }
     if old_refs:
         base = mf.base_dir(item_path, man)
-        prior = spark.read.parquet(
-            *[str(Path(base) / r) for r in sorted(old_refs)]
+        prior = read_parquet(
+            spark,
+            [Path(base) / r for r in sorted(old_refs)],
+            schema=MASK_SCHEMA,
         ).filter(F.col("file").isin(sorted(touched)))
         mask = mask.unionByName(prior)
     rel = write_mask_dir(spark, item_path, mask)
@@ -268,9 +277,7 @@ def masked_scan(spark, item_path, man: dict, files: list[str]):
     from pystore_spark import manifest as mf
 
     base = mf.base_dir(item_path, man)
-    df = spark.read.option("basePath", str(base)).parquet(
-        *[str(base / f) for f in files]
-    )
+    df = read_parquet(spark, [base / f for f in files], base)
     mask = mask_frame(spark, item_path, man)
     if mask is None:
         fkey, pkey = scan_keys(base)

@@ -310,10 +310,9 @@ def cosine_dedup_pairs(
 # the bounded pin FIFO moved to pystore_spark.partition (r13: bm25's
 # shared tokenized child pins through the same registry) — these
 # aliases keep the established names; _PIN_CACHE is the SAME list
-# object partition mutates
+# object partition mutates (its cap is partition._PIN_CACHE_CAP)
 from pystore_spark.partition import (  # noqa: E402
     _PIN_CACHE,
-    _PIN_CACHE_CAP,
     pin_frame as _pin_frame,
 )
 
@@ -792,6 +791,11 @@ def _local_fold_assign(X, C):
     return acc.argmin(axis=1)
 
 
+class _FoldSumOverflow(Exception):
+    """A per-cell int64 sum of the driver fold could wrap: the caller
+    must take the distributed tier, whose ANSI ``sum`` raises instead."""
+
+
 def _local_fold_kmeans(
     vecs: "list[list[float]]",
     cents: "list[list[float]]",
@@ -806,18 +810,24 @@ def _local_fold_kmeans(
     centroid as ``(double(sum(floor(x*quant) as int64)) / n) / quant``
     (int64 sums are order-independent; the two divisions are the same
     correctly-rounded IEEE ops as the distributed update and the
-    DuckDB oracle). Empty cells keep their previous centroid."""
+    DuckDB oracle). Empty cells keep their previous centroid.
+
+    Raises :class:`_FoldSumOverflow` when ``max|floor(x*quant)| × rows``
+    reaches 2^63: numpy's ``add.at`` would wrap silently where the
+    distributed ``F.sum`` raises ARITHMETIC_OVERFLOW."""
     import numpy as np
 
     X = np.asarray(vecs, dtype=np.float64)
     if X.ndim != 2 or X.shape[0] == 0:
         return cents
     dim = X.shape[1]
+    Q = np.floor(X * quant).astype(np.int64)
+    if Q.size and int(np.abs(Q).max()) * X.shape[0] >= 1 << 63:
+        raise _FoldSumOverflow
     for _ in range(n_iters):
         C = np.asarray(cents, dtype=np.float64)
         k = C.shape[0]
         cells = _local_fold_assign(X, C)
-        Q = np.floor(X * quant).astype(np.int64)
         sums = np.zeros((k, dim), dtype=np.int64)
         np.add.at(sums, cells, Q)
         counts = np.bincount(cells, minlength=k)
@@ -1252,7 +1262,10 @@ def train_ivf_centroids(
             )
         if method == "fold" or len(init) < GEMM_ASSIGN_MIN_CELLS:
             vecs = [v for _i, v in local_rows if v is not None]
-            return _local_fold_kmeans(vecs, init, n_iters, quant)
+            try:
+                return _local_fold_kmeans(vecs, init, n_iters, quant)
+            except _FoldSumOverflow:
+                pass  # the distributed tier raises the overflow
         # auto at GEMM-tier C: the distributed kernel's arithmetic
         # is the contract — fall through (the collect still resolved
         # n_cells="auto" without a count job)
@@ -1492,15 +1505,18 @@ def train_pq_codebooks(
             lvecs = [v for _i, v in local_rows if v is not None]
             # subspaces are independent — the per-subspace local loop
             # equals the fused distributed fold tier (parity-pinned)
-            return [
-                _local_fold_kmeans(
-                    [v[j * ld:(j + 1) * ld] for v in lvecs],
-                    [v[j * ld:(j + 1) * ld] for v in init],
-                    n_iters,
-                    quant,
-                )
-                for j in range(m)
-            ]
+            try:
+                return [
+                    _local_fold_kmeans(
+                        [v[j * ld:(j + 1) * ld] for v in lvecs],
+                        [v[j * ld:(j + 1) * ld] for v in init],
+                        n_iters,
+                        quant,
+                    )
+                    for j in range(m)
+                ]
+            except _FoldSumOverflow:
+                pass  # the distributed tier raises the overflow
         # GEMM-tier C: keep the distributed kernel's arithmetic
     init_rows = (
         df.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
@@ -1634,44 +1650,47 @@ def train_residual_pq(
     )
     if local_rows is not None:
         init = [v for _i, v in local_rows[:n_cells] if v is not None]
-        if init:
-            import numpy as np
+        try:
+            if init:
+                import numpy as np
 
-            vecs = [v for _i, v in local_rows if v is not None]
-            cents = _local_fold_kmeans(vecs, init, n_iters, quant)
-            X = np.asarray(vecs, dtype=np.float64)
-            C = np.asarray(cents, dtype=np.float64)
-            cells = _local_fold_assign(X, C)
-            R = X - C[cells]  # residualize: per-component double sub
-            # a residual row is null iff the source vector is, and
-            # null rows still occupy PQ init-window slots (exactly
-            # train_pq_codebooks' orderBy(id).limit window over the
-            # residual frame)
-            res_it = iter(r.tolist() for r in R)
-            res_all = [
-                next(res_it) if v is not None else None
-                for _i, v in local_rows
-            ]
-            rinit = [r for r in res_all[:pq_cells] if r is not None]
-            res = [r for r in res_all if r is not None]
-            dim = len(rinit[0]) if rinit else 0
-            if rinit and dim % m == 0:
-                d_sub = dim // m
-                books = [
-                    _local_fold_kmeans(
-                        [r[j * d_sub:(j + 1) * d_sub] for r in res],
-                        [r[j * d_sub:(j + 1) * d_sub] for r in rinit],
-                        n_iters,
-                        # books train with train_pq_codebooks' PINNED
-                        # 1e7, NOT the coarse quant — the unfused
-                        # sequence this function must equal always
-                        # does (review r13: a caller quant != 1e7
-                        # previously made the tiers diverge)
-                        1e7,
-                    )
-                    for j in range(m)
+                vecs = [v for _i, v in local_rows if v is not None]
+                cents = _local_fold_kmeans(vecs, init, n_iters, quant)
+                X = np.asarray(vecs, dtype=np.float64)
+                C = np.asarray(cents, dtype=np.float64)
+                cells = _local_fold_assign(X, C)
+                R = X - C[cells]  # residualize: per-component double sub
+                # a residual row is null iff the source vector is, and
+                # null rows still occupy PQ init-window slots (exactly
+                # train_pq_codebooks' orderBy(id).limit window over the
+                # residual frame)
+                res_it = iter(r.tolist() for r in R)
+                res_all = [
+                    next(res_it) if v is not None else None
+                    for _i, v in local_rows
                 ]
-                return cents, books
+                rinit = [r for r in res_all[:pq_cells] if r is not None]
+                res = [r for r in res_all if r is not None]
+                dim = len(rinit[0]) if rinit else 0
+                if rinit and dim % m == 0:
+                    d_sub = dim // m
+                    books = [
+                        _local_fold_kmeans(
+                            [r[j * d_sub:(j + 1) * d_sub] for r in res],
+                            [r[j * d_sub:(j + 1) * d_sub] for r in rinit],
+                            n_iters,
+                            # books train with train_pq_codebooks' PINNED
+                            # 1e7, NOT the coarse quant — the unfused
+                            # sequence this function must equal always
+                            # does (review r13: a caller quant != 1e7
+                            # previously made the tiers diverge)
+                            1e7,
+                        )
+                        for j in range(m)
+                    ]
+                    return cents, books
+        except _FoldSumOverflow:
+            pass  # the distributed tier raises the overflow
         # empty/odd-dim init windows: the unfused path owns the
         # error messages — fall through
     cents = train_ivf_centroids(

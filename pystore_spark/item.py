@@ -252,11 +252,9 @@ class Item:
                 str(base / f) for f in (self._manifest.get("files") or [])
             ]
             if files:
-                df = self.spark.read.option(
-                    "basePath", str(base)
-                ).parquet(*files)
+                df = utils.read_parquet(self.spark, files, base)
                 return self._apply_dv(df)
-        return self.spark.read.parquet(str(self._path))
+        return utils.read_parquet(self.spark, self._path)
 
     def _apply_dv(self, df: DataFrame) -> DataFrame:
         """Apply the manifest's deletion-vector mask (dv.py) to a
@@ -380,16 +378,16 @@ class Item:
                 # miss probes went from O(files) to flat)
                 rels = rels[:1]
             if rels:
-                df = self.spark.read.option("basePath", str(base)).parquet(
-                    *[str(base / r) for r in rels]
+                df = utils.read_parquet(
+                    self.spark, [base / r for r in rels], base
                 )
                 if not bloom_empty:
                     df = self._apply_dv(df)
             else:
-                df = self.spark.read.parquet(str(self._path))
+                df = utils.read_parquet(self.spark, self._path)
         else:
             bloom_empty = False
-            df = self.spark.read.parquet(str(self._path))
+            df = utils.read_parquet(self.spark, self._path)
         cond = filters_to_column(filters)
         if cond is not None:
             df = df.filter(cond)

@@ -377,11 +377,10 @@ def try_incremental_refresh(
         return None
     from pystore_spark import manifest as mf
     from pystore_spark.partition import PARTITION_COL
+    from pystore_spark.utils import read_parquet
 
     base = mf.base_dir(it._path, it._manifest)
-    ddf = collection.spark.read.option("basePath", str(base)).parquet(
-        *[str(base / f) for f in delta]
-    )
+    ddf = read_parquet(collection.spark, [base / f for f in delta], base)
     if PARTITION_COL in ddf.columns:
         ddf = ddf.drop(PARTITION_COL)
     view = collection.sql_view_names([dep])[dep]

@@ -203,6 +203,31 @@ def pin_frame(df: DataFrame) -> DataFrame:
     return pinned
 
 
+def _distrusted(name: str) -> bool:
+    return name == "Filter" or name.endswith("Join")
+
+
+def _has_node(plan, match) -> bool:
+    """True when a node of the JVM ``plan`` tree has a ``nodeName``
+    that ``match`` accepts. The walk covers the nodes the rendered
+    plan shows: children, inner children (a cached relation's plan,
+    subqueries) and the current plan under an adaptive node or a
+    query stage."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if match(name):
+            return True
+        for kids in (node.children(), node.innerChildren()):
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+    return False
+
+
 def estimate_size_bytes(
     df: DataFrame, distrust_filters: bool = False
 ) -> int | None:
@@ -210,20 +235,21 @@ def estimate_size_bytes(
 
     ``distrust_filters=True`` (ADVICE r12): return None — "unknown",
     so size-gated SKEW guards fall through to their cheap probe —
-    when the optimized plan contains Filter/Join nodes, whose
+    when the optimized plan has a Filter or Join node, whose
     size-only estimates can drift far from reality (a join can
     multiply, and compressed-source ratios propagate through
-    selections). Callers whose small-tier has its own second-line
+    selections). Nodes are matched by name over a walk of the plan
+    tree, so a column alias or string literal reading "Filter x"
+    does not count. Callers whose small-tier has its own second-line
     defense (the KMeans driver tier's row cap + maxResultSize
     fallback) keep the plain estimate; callers whose small-tier would
     silently skip a single-reducer guard pass the flag."""
     try:
-        jdf = df._jdf  # noqa: SLF001 — no public stats API in PySpark
-        if distrust_filters:
-            plan_s = str(jdf.queryExecution().optimizedPlan())
-            if "Filter " in plan_s or "Join " in plan_s:
-                return None
-        stats = jdf.queryExecution().optimizedPlan().stats()
+        # _jdf: no public stats API in PySpark
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if distrust_filters and _has_node(plan, _distrusted):
+            return None
+        stats = plan.stats()
         # py4j auto-converts scala BigInt to Python int; str() covers both
         size = int(str(stats.sizeInBytes()))
         # Catalyst returns Long.MaxValue-ish when unknown

@@ -72,36 +72,38 @@ def get_spark(
 #: configures fresh.
 _CONFIGURED: "weakref.WeakSet" = weakref.WeakSet()
 
+#: the runtime confs configure() pins, in the order it sets them
+_PINNED_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # int64 µs adjusted-to-UTC — the one parquet timestamp encoding the
+    # Spark writer, the Arrow writer (arrow_path.py), and both readers
+    # agree on; INT96 (the default) breaks Arrow-side schema unification
+    # when an item mixes Spark- and Arrow-written files
+    ("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"),
+    ("spark.sql.execution.arrow.maxRecordsPerBatch", "100000"),
+)
+
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine confs to an externally created
     session (the driver hands us its own SparkSession). Idempotent
     and memoized per session object — repeat calls are a set lookup
-    plus ONE sentinel conf read (ADVICE r12: memoization must stay
-    self-healing — if external code mutates a pinned conf after the
-    first call, e.g. the session timeZone, the fast path detects the
-    drift and falls through to full reconfiguration instead of
-    silently computing on the wrong settings)."""
+    plus one read of each pinned conf. The memo stays self-healing:
+    if external code mutates a pinned conf after the first call (the
+    session timeZone, or ``nanosAsLong``, which the scan schema memo
+    in utils.read_parquet keys on), or the conf bridge fails, the
+    fast path drops the memo and falls through to full
+    reconfiguration instead of computing on the wrong settings."""
     if spark in _CONFIGURED:
         try:
-            if (
-                spark.conf.get("spark.sql.session.timeZone")
-                == "UTC"
-            ):
+            if all(spark.conf.get(k) == v for k, v in _PINNED_CONFS):
                 return spark
-            _CONFIGURED.discard(spark)  # drifted — reconfigure
         except Exception:
-            return spark  # conf bridge unavailable (mock/Connect stub)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # int64 µs adjusted-to-UTC — the one parquet timestamp encoding the
-    # Spark writer, the Arrow writer (arrow_path.py), and both readers
-    # agree on; INT96 (the default) breaks Arrow-side schema unification
-    # when an item mixes Spark- and Arrow-written files
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
+            pass  # conf bridge failed — re-assert below
+        _CONFIGURED.discard(spark)
+    for k, v in _PINNED_CONFS:
+        spark.conf.set(k, v)
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pystore_spark.session import configure
+from pystore_spark.utils import read_parquet
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -112,7 +113,7 @@ def read_jsonl(
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for c in _NS_TS_COLS.get(name, []):
         if c in df.columns and dict(df.dtypes).get(c) == "bigint":
             # long ns → µs timestamp (same truncation DuckDB applies);

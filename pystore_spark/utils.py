@@ -14,6 +14,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import stat
+import threading
+from collections import OrderedDict
 from datetime import datetime, timezone
 from pathlib import Path
 from typing import Any
@@ -449,3 +452,93 @@ def update_metadata_cas(
         f"metadata update on {path!r} kept losing the manifest CAS; "
         f"retry when the item is quiescent"
     ) from last
+
+
+# ---------------------------------------------------------------------------
+# Parquet scans. Every Spark Parquet read in the engine is built here.
+# A path-based ``spark.read.parquet(...)`` first runs a one-task job
+# that reads ONE footer to infer the schema: the lexicographically
+# smallest data file (Spark sorts the leaf files by path before taking
+# the first). Engine data files are immutable under commit-token-unique
+# names and a source table changes only when rewritten, so that footer
+# -- and the schema Spark infers from it -- is the same on every scan
+# until the file itself changes. The memo below keeps it, and the scan
+# passes it through ``spark.read.schema(...)``: no inference job, and
+# the same rows, column order and partition columns (partition
+# discovery still runs on the paths, exactly as before).
+
+#: session confs that change how Parquet types map to Spark types, or
+#: which footers Spark infers from (``mergeSchema``): part of the key
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO_CAP = 1024
+_SCHEMA_MEMO: "OrderedDict[tuple, Any]" = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _footer_schema(spark, paths: list[str]):
+    """The data schema Spark would infer for a scan of ``paths`` (the
+    smallest path's footer), memoized on that file's identity and the
+    type-mapping confs. None when it cannot be known without Spark's
+    own inference: a directory (its leaf files are not known here),
+    a path this process cannot stat (remote schemes), ``mergeSchema``
+    on, or an unreadable conf bridge."""
+    try:
+        first = min(paths)
+        st = os.stat(first)
+    except (OSError, ValueError):  # no path, or not a local one
+        return None
+    if stat.S_ISDIR(st.st_mode):
+        return None
+    try:
+        confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    except Exception:
+        return None
+    if str(confs[-1]).lower() == "true":  # mergeSchema: every footer
+        return None
+    key = (first, st.st_mtime_ns, st.st_size, st.st_ino, confs)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_MEMO.get(key)
+        if schema is not None:
+            _SCHEMA_MEMO.move_to_end(key)
+    if schema is None:
+        schema = spark.read.parquet(first).schema
+        with _SCHEMA_LOCK:
+            _SCHEMA_MEMO[key] = schema
+            while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_CAP:
+                _SCHEMA_MEMO.popitem(last=False)
+    # a data column named like a hive partition key resolves against
+    # the partition value in Spark's own inference; leave that to it
+    keys = {
+        seg.split("=", 1)[0].lower()
+        for seg in Path(first).parts[:-1]
+        if "=" in seg
+    }
+    if keys and any(f.name.lower() in keys for f in schema.fields):
+        return None
+    return schema
+
+
+def read_parquet(spark, paths, base=None, schema=None):
+    """The engine's one Spark Parquet scan constructor: ``paths`` (one
+    path or a list) under hive ``base`` (Spark's ``basePath``).
+    ``schema`` pins a known data schema (dv masks); otherwise the
+    memoized footer schema (:func:`_footer_schema`) is used, and a
+    scan it cannot vouch for falls back to Spark's inferring read."""
+    if isinstance(paths, (str, os.PathLike)):
+        paths = [paths]
+    paths = [str(p) for p in paths]
+    reader = spark.read
+    if base is not None:
+        reader = reader.option("basePath", str(base))
+    if schema is None:
+        schema = _footer_schema(spark, paths)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)

@@ -358,3 +358,41 @@ def test_configure_self_heals_conf_drift(spark):
         )
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_configure_restores_every_pinned_conf(spark):
+    """The memoized fast path checks every pinned conf, not only the
+    timezone: the Parquet scan schema memo keys on ``nanosAsLong``."""
+    from pystore_spark.session import configure
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    configure(spark)
+    try:
+        spark.conf.set(conf, "false")
+        configure(spark)
+        assert spark.conf.get(conf) == "true"
+    finally:
+        spark.conf.set(conf, "true")
+
+
+def test_distrust_filters_walks_plan_nodes(spark):
+    """estimate_size_bytes(distrust_filters=True) matches plan nodes,
+    not the rendered plan text: an alias or literal reading "Filter x"
+    / "Join y" stays trusted, a real Filter or Join does not."""
+    from pyspark.sql import functions as F
+
+    from pystore_spark.partition import estimate_size_bytes
+
+    named = (
+        spark.range(100)
+        .withColumn("s", F.lit("Filter x"))
+        .withColumnRenamed("id", "Join y")
+    )
+    assert estimate_size_bytes(named, distrust_filters=True) is not None
+    assert (
+        estimate_size_bytes(spark.range(100).filter("id > 3"), True)
+        is None
+    )
+    joined = spark.range(10).join(spark.range(10), "id")
+    assert estimate_size_bytes(joined, distrust_filters=True) is None
+    assert estimate_size_bytes(joined) is not None

@@ -1422,6 +1422,44 @@ def test_driver_local_trainer_matches_distributed(spark, monkeypatch):
     assert capped == uncapped
 
 
+
+def test_driver_kmeans_tier_raises_on_int64_sum_overflow(
+    spark, monkeypatch, tmp_path
+):
+    """A per-cell int64 component sum past 2^63: the distributed fold
+    raises ARITHMETIC_OVERFLOW under ANSI, and the driver tier must
+    not wrap silently into a wrong centroid -- it bails to the
+    distributed tier and raises alike, on every trainer that uses it.
+    Values sit inside the collect's per-component bound (|x| <= 1e11
+    at quant 1e7), so the driver tier does take these rows."""
+    from pyspark.errors import ArithmeticException
+
+    from pystore_spark import config
+
+    rows = [(i, [9.0e10, -9.0e10]) for i in range(12)]
+    spark.createDataFrame(rows, "id long, v array<double>").write.parquet(
+        str(tmp_path / "v")
+    )
+    df = spark.read.parquet(str(tmp_path / "v"))  # a sized relation
+    assert S._collect_train_rows(df, "v", "id") is not None
+    trainers = [
+        lambda: S.train_ivf_centroids(df, "v", "id", n_cells=1, n_iters=1),
+        lambda: S.train_pq_codebooks(
+            df, "v", "id", m=2, n_cells=1, n_iters=1
+        ),
+        lambda: S.train_residual_pq(
+            df, "v", "id", n_cells=1, m=2, pq_cells=1, n_iters=1
+        ),
+    ]
+    for train in trainers[:2]:
+        for cap in (0, 32 << 20):  # distributed, then the driver tier
+            monkeypatch.setattr(config, "KMEANS_DRIVER_TRAIN_MAX_BYTES", cap)
+            with pytest.raises(ArithmeticException, match="OVERFLOW"):
+                train()
+    # the residual trainer's coarse step is the same overflowing sum
+    with pytest.raises(ArithmeticException, match="OVERFLOW"):
+        trainers[2]()
+
 def test_pq_adc_inplan_lut_matches_collect(spark):
     """The r13 in-plan LUT projection (no driver collect in the ADC
     search path) must be bit-identical to the driver-side LUT build
@@ -1795,6 +1833,7 @@ def test_semdedup_pin_cache_bounded(spark):
     assignment frames without bound: the pin registry evicts past
     its cap, so a bench loop or pipeline retry cannot age the session
     with dead cached blocks (r12 optimization)."""
+    from pystore_spark import partition
     from pystore_spark.functions import similarity as S
     from pystore_spark.sources import load_table
 
@@ -1808,9 +1847,9 @@ def test_semdedup_pin_cache_bounded(spark):
             emb, "embedding", "vec_id", n_cells=4, n_iters=1,
             threshold=0.35,
         ).write.mode("overwrite").format("noop").save()
-    assert len(S._PIN_CACHE) <= S._PIN_CACHE_CAP
+    assert len(S._PIN_CACHE) <= partition._PIN_CACHE_CAP
     after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert after - before <= S._PIN_CACHE_CAP
+    assert after - before <= partition._PIN_CACHE_CAP
 
 
 def test_semdedup_keeps_everything_below_threshold(spark):

@@ -4,15 +4,19 @@
 # take every N-th collected item (PYSTORE_TEST_SHARD in
 # tests/conftest.py). The suite profile is flat — ~0.5 s/test of
 # irreducible Spark-job latency — so single-process time is bounded
-# below by test count, while N local[4] sessions on the 32-CPU box
-# divide the wall-clock by ~N. Shards are disjoint and exhaustive by
-# construction (same collection order in every process), so a green
-# fast gate is exactly a green `pytest tests/`.
+# below by test count, while N local[4] sessions divide the
+# wall-clock by ~N. Each shard is one JVM with local[4], so the default
+# is one shard per 4 CPUs: more shards than that oversubscribe the
+# host (and each JVM takes its own heap). Shards are disjoint and
+# exhaustive by construction (same collection order in every
+# process), so a green fast gate is exactly a green `pytest tests/`.
 #
-#   bash tools/fast_gate.sh [n_shards]   # default 8
+#   bash tools/fast_gate.sh [n_shards]   # default max(1, nproc / 4)
 set -u
 cd "$(dirname "$0")/.."
-N="${1:-${PYSTORE_FAST_GATE_SHARDS:-8}}"
+DEFAULT_N=$(($(env -u OMP_NUM_THREADS nproc) / 4))
+[ "${DEFAULT_N}" -ge 1 ] || DEFAULT_N=1
+N="${1:-${PYSTORE_FAST_GATE_SHARDS:-${DEFAULT_N}}}"
 echo "== fast gate: ${N}-way sharded pytest (default tier) =="
 start=$(date +%s)
 pids=()
